@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-rehearsal harness (SCALE.md): run named registry queries against a
   * data directory and print, per query, wall time, result rows, shuffle
@@ -40,13 +39,7 @@ object ScaleRehearsal {
       else args.drop(1).toSeq
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionConf.overlay(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionConf.local(SessionConf.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val meter = new ShuffleMeter
     spark.sparkContext.addSparkListener(meter)

@@ -2,14 +2,36 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SPARK_GRAFT_CONF="k=v;k=v" — arbitrary session-conf overlay for
-  * robustness sweeps (AQE off, exchange reuse off, odd partition counts…).
-  * ONE parser for Verify and Bench: segments are trimmed (a space after
-  * ';' must not silently turn a real key into an unknown one, faking a
-  * green sweep under default configs) and malformed segments fail loudly
-  * with the offending text.
+/** The graft session recipe, in one place.
+  *
+  * [[local]] builds the local session every main and the test fixture use.
+  * [[overlay]] adds graft's conf defaults and SPARK_GRAFT_CONF="k=v;k=v",
+  * an arbitrary session-conf overlay for robustness sweeps (AQE off,
+  * exchange reuse off, odd partition counts…). Its segments are trimmed (a
+  * space after ';' must not silently turn a real key into an unknown one,
+  * faking a green sweep under default configs) and malformed segments fail
+  * loudly with the offending text.
   */
 object SessionConf {
+  /** Local cores for a session: SPARK_GRAFT_CPUS, else every core the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** `local[cpus]` with one shuffle partition per core, UTC, no UI, the
+    * [[overlay]] confs, and log level WARN. Returns the active session if
+    * one exists (`getOrCreate`).
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = overlay(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def overlay(builder: SparkSession.Builder): SparkSession.Builder = {
     // Graft base default, set BEFORE the env overlay so SPARK_GRAFT_CONF
     // can still override it in sweeps: the driver-generated parquet holds

@@ -37,9 +37,8 @@ object Tables {
     // original size-only test adding ~0.6 GB of shuffle to every lineitem
     // query over a 102-part input, so the guard now also requires the
     // input to actually BE the few-big-files shape maxPartitionBytes
-    // cannot split. Disable outright with SPARK_GRAFT_FANOUT=0.
-    val fanout = sys.env.getOrElse("SPARK_GRAFT_FANOUT", "1") != "0"
-    if (fanout && leafFileCount(spark, path) < 4 && fileSize(spark, path) > (1L << 18))
+    // cannot split.
+    if (leafFileCount(spark, path) < 4 && fileSize(spark, path) > (1L << 18))
       // HASH fanout on the table's leading column (every sf table leads
       // with a near-unique id) rather than round-robin (r15 optimization,
       // guide §2.4/§2.5): round-robin repartition first pays a local

@@ -54,20 +54,6 @@ object Lineage {
 
   /** Truncate `df`'s lineage eagerly, per the session's reliability flag. */
   def truncate(df: DataFrame): DataFrame = {
-    if (sys.env.contains("GRAFT_TRUNC_DEBUG")) {
-      val t0 = System.nanoTime()
-      val res = truncate0(df)
-      val caller = Thread.currentThread.getStackTrace
-        .drop(1).find(f => !f.getClassName.startsWith("graft.ops.Lineage"))
-        .map(f => s"${f.getClassName.split('.').last}:${f.getLineNumber}")
-        .getOrElse("?")
-      System.err.println(f"[truncate] $caller ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      return res
-    }
-    truncate0(df)
-  }
-
-  private def truncate0(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val reliable = sess.conf.getOption(FlagKey).exists(_.toBoolean)
     if (!reliable) df.localCheckpoint()

@@ -105,8 +105,8 @@ object StreamingQueries {
     * the state-store delta files and WAL/offset commits it fsyncs per
     * micro-batch are pure fixed cost on a real disk. Root them on tmpfs
     * (/dev/shm) when present: measured on the r12 box this cuts the
-    * per-drain state-store lifecycle cost (the 0.6–0.9 s addBatch slice of
-    * the GRAFT_STREAM_DEBUG decomposition) without touching semantics.
+    * per-drain state-store lifecycle cost (the 0.6–0.9 s addBatch slice
+    * of a drain) without touching semantics.
     * `spark.graft.streamCkptRoot` pins it elsewhere; production users
     * writing REAL sinks own their own checkpointLocation entirely.
     */
@@ -206,12 +206,6 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-          q.recentProgress.foreach { pr =>
-            System.err.println(s"[drain $name] batch ${pr.batchId} rows=${pr.numInputRows} " +
-              s"durationMs=${pr.durationMs}")
-          }
-        }
       }
     } finally {
       // tmpfs is RAM: drop the drained query's throwaway checkpoint now

@@ -129,7 +129,7 @@ class FunctionsSpec extends SparkSpec {
       cur
     }
     var screenedSeen = 0
-    var dpSeen = 0
+    var withinSeen = 0
     for (_ <- 1 to 2000) {
       val a = randStr(1 + rnd.nextInt(14))
       val b = if (rnd.nextBoolean()) mutate(a, rnd.nextInt(7)) else randStr(1 + rnd.nextInt(14))
@@ -139,11 +139,24 @@ class FunctionsSpec extends SparkSpec {
       val got = EditDistanceWithin.distance(ua, ub, k)
       val want = ua.levenshteinDistance(ub, k)
       assert(got == want, s"kernel diverged on ('$a','$b',$k): got $got want $want")
-      if (got == -1) screenedSeen += 1 else dpSeen += 1
+      // a -1 from the length check or band exhaustion is not the screen:
+      // count only draws the length check passes and the bag bound rejects
+      if (math.abs(a.length - b.length) <= k &&
+          EditDistanceWithin.bagBeyond(ua.getBytes, ub.getBytes, k)) screenedSeen += 1
+      if (got != -1) withinSeen += 1
     }
-    // both paths must actually have been exercised
-    assert(screenedSeen > 100 && dpSeen > 100,
-      s"fuzz draw did not cover both screen outcomes ($screenedSeen / $dpSeen)")
+    // both screen outcomes must actually have been exercised
+    assert(screenedSeen > 100 && withinSeen > 100,
+      s"fuzz draw did not cover both screen outcomes ($screenedSeen / $withinSeen)")
+  }
+
+  test("edit_distance_within: equal lengths, disjoint alphabets are rejected by the bag screen") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val (a, b) = (UTF8String.fromString("aaaa"), UTF8String.fromString("bbbb"))
+    // |n - m| = 0 ≤ k < max length, so only the bag bound (D = 8 > 2k) can fire
+    assert(EditDistanceWithin.bagBeyond(a.getBytes, b.getBytes, 3))
+    assert(EditDistanceWithin.distance(a, b, 3) == -1)
+    assert(a.levenshteinDistance(b, 3) == -1)
   }
 
   test("damerau_levenshtein: full-variant known values, bounds, non-ASCII") {
