@@ -1,6 +1,9 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 import org.apache.hadoop.fs.Path
 
 /** Batch pipeline runner with optional per-stage checkpoint + replay —
@@ -22,6 +25,12 @@ import org.apache.hadoop.fs.Path
   * Scale: checkpoints are parquet tables (partitioned by the data's own
   * layout), not the reference's single S3 JSON object — a 100 TB
   * intermediate is just another distributed table.
+  *
+  * Per stage a checkpointed run starts exactly one Spark job, the write:
+  * run-log rows are written on the driver ([[graft.ops.RunLog]]), and the
+  * read-back passes the schema of the frame just written, which is the
+  * schema Spark stored in the footer, so no job re-reads that footer to
+  * infer it.
   */
 object Runner {
 
@@ -35,7 +44,12 @@ object Runner {
     *
     * `replayFrom`: skip every stage before this name and seed from its
     * checkpoint (reference `-r -s <stage>`). Fails fast if the checkpoint
-    * is missing.
+    * is missing or has no `_SUCCESS` marker (a write that never committed).
+    *
+    * Each checkpoint is written to a hidden `<checkpointDir>/.<stage>.tmp`
+    * and then swapped in with delete + rename, like [[graft.io.Sinks.compact]]:
+    * a stage whose attempts all fail leaves the previous run's checkpoint of
+    * that stage in place and replayable.
     */
   def runCheckpointed(
       spark: SparkSession,
@@ -48,26 +62,39 @@ object Runner {
       require(names.contains(r), s"replayFrom stage '$r' not in pipeline $names")
     }
     val startIdx = replayFrom.map(names.indexOf).getOrElse(0)
+    val root = new Path(checkpointDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     var current: DataFrame =
       if (startIdx == 0) p.source
       else {
-        val prev = names(startIdx - 1)
-        val path = s"$checkpointDir/$prev"
-        require(exists(spark, path), s"replay checkpoint missing: $path")
-        spark.read.parquet(path)
+        val seed = new Path(root, names(startIdx - 1))
+        require(fs.exists(new Path(seed, "_SUCCESS")),
+          s"replay checkpoint missing or uncommitted (no _SUCCESS): $seed")
+        // the seed's schema is not known here, so this read infers it
+        spark.read.parquet(seed.toString)
       }
     val runId = java.util.UUID.randomUUID().toString
     p.stages.drop(startIdx).foreach { st =>
-      val out = s"$checkpointDir/${st.name}"
-      def materialize(): Unit = withRetries(st.retries, st.name) {
-        st(current).write.mode("overwrite").parquet(out)
+      val out = new Path(root, st.name)
+      val tmp = new Path(root, s".${st.name}.tmp")
+      def materialize(): DataFrame = {
+        val written = withRetries(st.retries, st.name) {
+          val df = st(current)
+          df.write.mode("overwrite").parquet(tmp.toString)
+          df
+        }
+        fs.delete(out, true)
+        require(fs.rename(tmp, out), s"rename $tmp -> $out failed")
+        written
       }
       // heartbeat/audit rows per stage (K4) when a run-log table is given
-      runLogPath match {
+      val written = runLogPath match {
         case Some(path) => graft.ops.RunLog.tracked(spark, path, runId, st.name)(materialize())
         case None => materialize()
       }
-      current = spark.read.parquet(out)
+      // Spark stored this schema in the footer; passing it skips the job
+      // that would re-read the footer to infer it
+      current = spark.read.schema(asStored(written.schema)).parquet(out.toString)
     }
     current
   }
@@ -77,18 +104,30 @@ object Runner {
   def checkpointOf(spark: SparkSession, checkpointDir: String, stage: String): DataFrame =
     spark.read.parquet(s"$checkpointDir/$stage")
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** The schema as parquet stores it: char/varchar columns are strings, their
+    * declared type kept in the field metadata. A frame's schema holds
+    * CharType/VarcharType only under `spark.sql.preserveCharVarcharTypeInfo`,
+    * and `DataFrameReader.schema` rejects them. */
+  private def asStored(s: StructType): StructType =
+    StructType(s.fields.map(f => f.copy(dataType = stored(f.dataType))))
+
+  private def stored(t: DataType): DataType = t match {
+    case _: CharType | _: VarcharType => StringType
+    case s: StructType => asStored(s)
+    case a: ArrayType => a.copy(elementType = stored(a.elementType))
+    case m: MapType => m.copy(keyType = stored(m.keyType), valueType = stored(m.valueType))
+    case other => other
   }
 
+  /** Fatal errors (an interrupt, a VM error) are not retried and propagate
+    * as they are. */
   private def withRetries[T](retries: Int, stage: String)(body: => T): T = {
     var attempt = 0
     var last: Throwable = null
     while (attempt <= retries) {
       try return body
       catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           last = e
           attempt += 1
       }

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 import graft.io.{Seeds, Sources}
@@ -23,6 +25,28 @@ class OpsSpec extends SparkSpec {
     }
     val failed = spark.read.parquet(path).filter(col("status") === "failed").collect()
     assert(failed.length == 1 && failed.head.getAs[String]("detail") == "nope")
+  }
+
+  test("run log reads back as one table across Spark-written and driver-written rows") {
+    import spark.implicits._
+    val path = tmpDir("runlog-mixed") + "/log"
+    def at(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
+    val old = RunLog.Entry("r0", "a", "started", "", 0L, at("2026-01-02T03:04:05.123456Z"))
+    // how rows were appended before the driver-side writer
+    Seq(old).toDF().write.mode(SaveMode.Append).parquet(path)
+    val fresh = Seq(
+      RunLog.Entry("r1", "a", "succeeded", "ok", 17L, at("2026-01-02T03:04:06.654321Z")),
+      RunLog.Entry("r1", "b", "failed", null, 3L, null))
+    fresh.foreach(RunLog.log(spark, path, _))
+    val expected = StructType(Seq("run_id", "stage", "status", "detail")
+      .map(StructField(_, StringType)) ++
+      Seq(StructField("wall_ms", LongType), StructField("logged_at", TimestampType)))
+    val back = spark.read.parquet(path)
+    assert(back.schema == expected)
+    // whichever file's footer a reader infers from gives that schema
+    new java.io.File(path).listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(f => assert(spark.read.parquet(f.getPath).schema == expected, f.getName))
+    assert(back.as[RunLog.Entry].collect().sortBy(e => (e.run_id, e.stage)).toSeq == old +: fresh)
   }
 
   test("throttledMap preserves values and enforces the per-partition rate") {
